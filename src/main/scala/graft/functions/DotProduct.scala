@@ -116,6 +116,11 @@ object GraftFunctions {
       new ExpressionInfo(classOf[Jaccard64].getName, "graft_jaccard"),
       (children: Seq[Expression]) => Jaccard64(children.head, children(1)))
 
+  private[functions] val tokensDescriptor: Descriptor =
+    (new FunctionIdentifier("graft_tokens"),
+      new ExpressionInfo(classOf[Tokens].getName, "graft_tokens"),
+      (children: Seq[Expression]) => Tokens(children.head))
+
   private[functions] val stopHitsDescriptor: Descriptor =
     (new FunctionIdentifier("graft_stop_hits"),
       new ExpressionInfo(classOf[StopwordHits].getName, "graft_stop_hits"),
@@ -168,8 +173,8 @@ object GraftFunctions {
       (children: Seq[Expression]) => PostingsDecode(children.head))
 
   private val descriptors: Seq[Descriptor] = Seq(
-    dotDescriptor, shingleDescriptor, minhashDescriptor, jaccardDescriptor,
-    stopHitsDescriptor, simhashDescriptor, langIdDescriptor,
+    dotDescriptor, tokensDescriptor, shingleDescriptor, minhashDescriptor,
+    jaccardDescriptor, stopHitsDescriptor, simhashDescriptor, langIdDescriptor,
     segmentCountDescriptor, postingsEncodeDescriptor, postingsDecodeDescriptor)
 
   /** Idempotent per-session registration. */

@@ -4,14 +4,15 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native JVM kernels for the hot text-hashing paths, invoked from compact
   * Catalyst expressions ([[ShingleHash64]], [[MinHashSig]], [[Jaccard64]],
-  * [[StopwordHits]]).
+  * [[StopwordHits]], [[Tokens]]).
   *
   * Why not pure column expressions: the equivalent
   * `transform(shingles, s -> conv(substring(md5(s),1,15),16,10))` chain
@@ -46,6 +47,45 @@ object Kernels {
     md.reset()
     md.update(s.getBytes)
     top60(md.digest())
+  }
+
+  /** The bytes java.util.regex `\s` matches (no UNICODE_CHARACTER_CLASS):
+    * space and 0x09-0x0D. None of them can occur inside a multi-byte UTF-8
+    * sequence, so a byte scan finds exactly the regex's separators. */
+  @inline private def isSpace(b: Byte): Boolean =
+    b == 0x20 || (b >= 0x09 && b <= 0x0d)
+
+  /** Whitespace tokens of one string: the maximal runs of non-`\s` bytes,
+    * equal to `array_remove(split(trim(s), "\\s+"), "")`. A string that is
+    * not valid UTF-8 is first normalized as that expression's String
+    * round trip does (malformed sequences become U+FFFD). The bytes are
+    * copied once per row and every token slices that copy, so no token
+    * points into the input row's (possibly reused) buffer. */
+  def tokenize(s0: UTF8String): ArrayData = {
+    val s = if (s0.isValid) s0 else UTF8String.fromString(s0.toString)
+    val n = s.numBytes()
+    val b = new Array[Byte](n)
+    s.writeToMemory(b, Platform.BYTE_ARRAY_OFFSET)
+    var cnt = 0
+    var inTok = false
+    var i = 0
+    while (i < n) {
+      val sp = isSpace(b(i))
+      if (!sp && !inTok) cnt += 1
+      inTok = !sp
+      i += 1
+    }
+    val out = new Array[Any](cnt)
+    var k = 0
+    i = 0
+    while (k < cnt) {
+      while (isSpace(b(i))) i += 1
+      val start = i
+      while (i < n && !isSpace(b(i))) i += 1
+      out(k) = UTF8String.fromBytes(b, start, i - start)
+      k += 1
+    }
+    new GenericArrayData(out)
   }
 
   /** Greedy longest-match subword piece count for one word — the kernel
@@ -262,6 +302,87 @@ object Kernels {
     }
     new GenericArrayData(counts)
   }
+}
+
+/** `graft_tokens(text)` — whitespace tokenization with empty tokens
+  * dropped (see Kernels.tokenize): one byte scan per row instead of a
+  * String decode, a regex split and a UTF-8 re-encode per token. Operators
+  * reach it through TextOps.tokens, SQL through its registered name. */
+case class Tokens(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      s"graft_tokens requires a string, got ${child.dataType.simpleString}")
+  }
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "graft_tokens"
+
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.tokenize(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.Kernels.tokenize($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): Tokens =
+    copy(child = newChild)
+}
+
+/** Driver-built term -> dense id dictionary for [[TermIds]]. Ids are the
+  * terms' positions in `terms`, which must be distinct and sorted in
+  * UTF8String (binary) order, so that id order equals string order. The
+  * term array rides the stage's task binary; the hash index is rebuilt
+  * lazily wherever the dictionary is deserialized. */
+final class TermDictionary(val terms: Array[UTF8String]) extends Serializable {
+  @transient private lazy val index: java.util.HashMap[UTF8String, Integer] = {
+    val m = new java.util.HashMap[UTF8String, Integer](terms.length * 2)
+    var i = 0
+    while (i < terms.length) { m.put(terms(i), i); i += 1 }
+    m
+  }
+
+  def size: Int = terms.length
+
+  /** The ids of one array of terms, in the same order. */
+  def ids(arr: ArrayData): ArrayData = {
+    val n = arr.numElements()
+    val out = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      val id = index.get(arr.getUTF8String(i))
+      if (id == null) throw new IllegalArgumentException(
+        s"term ${arr.getUTF8String(i)} is not in the dictionary")
+      out(i) = id
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+/** `TermIds(terms, dict)` — an array<string> of terms mapped to their
+  * [[TermDictionary]] ids. Pair counting over ids hashes and compares two
+  * ints per pair instead of two strings, and allocates nothing per pair.
+  * Like [[MapLookup]] it carries a driver-built object, so it enters plans
+  * through ColumnBridge rather than the FunctionRegistry. */
+case class TermIds(child: Expression, dict: TermDictionary) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      s"graft_term_ids requires an array<string>, got ${child.dataType.simpleString}")
+  }
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "graft_term_ids"
+
+  override protected def nullSafeEval(input: Any): Any =
+    dict.ids(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val d = ctx.addReferenceObj("termDict", dict, classOf[TermDictionary].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $d.ids($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TermIds =
+    copy(child = newChild)
 }
 
 /** `graft_shingle_hash(toks, n, distinct)` — 60-bit md5-prefix hashes of

@@ -209,11 +209,20 @@ object GraphOps {
                            totalRawEdges: Long): Int =
     if (numPartitions > 0) numPartitions
     else {
-      val cap = math.max(spark.sparkContext.defaultParallelism,
-        spark.conf.get("spark.sql.shuffle.partitions", "200").toInt).toLong
+      val cap = partitionCap(spark.sparkContext.defaultParallelism,
+        spark.conf.get("spark.sql.shuffle.partitions", "200"))
       math.max(1L, math.min(cap,
         (totalRawEdges + edgesPerPartition - 1) / edgesPerPartition)).toInt
     }
+
+  /** Cluster cap of [[resolveParts]]. The conf value is read as stored:
+    * Spark validates it trimmed but keeps the raw string (" 8 "), and some
+    * deployments accept non-integers ("auto"); a value that does not parse
+    * as an integer contributes nothing, leaving defaultParallelism. */
+  private[graft] def partitionCap(defaultParallelism: Int,
+                                  shufflePartitions: String): Long =
+    math.max(defaultParallelism,
+      scala.util.Try(shufflePartitions.trim.toInt).getOrElse(defaultParallelism)).toLong
 
   // ---------------------------------------------------------------------
   // Localized iteration regime (small graphs)
@@ -256,6 +265,12 @@ object GraphOps {
   private def localizedCutoff: Long =
     sys.props.get("graft.graph.localizedCutoff").map(_.toLong)
       .getOrElse(aqeIterationCutoff)
+
+  /** Localized-regime gate for personalized PageRank: the driver holds one
+    * rank array per source and collects up to |sources| x n gathered rows
+    * per iteration, so the bounded state is the product, not n alone. */
+  private[graft] def pprFitsDriver(nVerts: Long, nSources: Int): Boolean =
+    nVerts * math.max(1, nSources) < localizedCutoff
 
   /** Driver-held graph skeleton for the localized regime: sorted vertex
     * ids, per-source out-degrees (raw list length — duplicates included
@@ -485,13 +500,12 @@ object GraphOps {
       val gathered = scatters.reduce(_.union(_))
         .groupBy("source", "dst").agg(sum(col("m")).as("in_mass"))
       explainIterOnce(tag, gathered, it)
-      val rows = gathered.collect()
-      inMass = sources.indices.map { ki =>
-        graft.functions.LongDoubleMap.fromPairs(rows.iterator
-          .filter(r => !r.isNullAt(0) && r.getLong(0) == sources(ki) &&
-            !r.isNullAt(1) && !r.isNullAt(2))
-          .map(r => (r.getLong(1), r.getDouble(2))).toArray)
-      }.toArray
+      // one pass buckets the gathered rows per source
+      val bySource = gathered.collect().toSeq
+        .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
+        .groupMap(_.getLong(0))(r => (r.getLong(1), r.getDouble(2)))
+      inMass = sources.map(k => graft.functions.LongDoubleMap.fromPairs(
+        bySource.getOrElse(k, Nil).toArray)).toArray
       val oneMinus = 1 - alpha
       val next = Array.tabulate(nSrc) { ki =>
         val a = new Array[Double](g.vertIds.length)
@@ -804,7 +818,7 @@ object GraphOps {
         vertices, parts, dedupeEdges, rangePartition, checkpointDir)
     val (verts, nVerts, adj) = buildGraph(edges, vertices, parts, dedupeEdges,
       rangePartition)
-    if (nVerts < localizedCutoff)
+    if (pprFitsDriver(nVerts, sources.length))
       return try withIterationAqe(edges, nVerts) {
         val g = collectDriverGraph(verts, adj.select(col("src"), col("outdeg")))
         val scatterFor = (k: Long, mm: graft.functions.LongDoubleMap) =>
@@ -817,8 +831,10 @@ object GraphOps {
     def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val srcDf = sources.toDF("source")
 
-    var state = verts.crossJoin(srcDf)
-      .withColumn("rank", when(col("nodeid") === col("source"), lit(1.0)).otherwise(lit(0.0)))
+    // (source, nodeid, rank) selected explicitly: with iterations <= 0 this
+    // IS the result, and it must match the localized regime's column order
+    var state = verts.crossJoin(srcDf).select(col("source"), col("nodeid"),
+      when(col("nodeid") === col("source"), lit(1.0)).otherwise(lit(0.0)).as("rank"))
     try withIterationAqe(edges, nVerts) { for (_ <- 1 to iterations) {
       // Same single-pass scatter/gather as pageRank: dangling rank flows to
       // a NULL sentinel dst within the one (source, dst) aggregation. The
@@ -881,7 +897,7 @@ object GraphOps {
     val cut = new LineageCutter(checkpointDir)
     val (verts, nVerts, e, deg) =
       buildEdgeGraph(edges, vertices, numPartitions, dedupeEdges, rangePartition)
-    if (nVerts < localizedCutoff)
+    if (pprFitsDriver(nVerts, sources.length))
       return try withIterationAqe(edges, nVerts) {
         val g = collectDriverGraph(verts, deg)
         val scatterFor = (k: Long, mm: graft.functions.LongDoubleMap) =>
@@ -894,8 +910,10 @@ object GraphOps {
     def maybeBroadcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val srcDf = sources.toDF("source")
 
-    var state = verts.crossJoin(srcDf)
-      .withColumn("rank", when(col("nodeid") === col("source"), lit(1.0)).otherwise(lit(0.0)))
+    // (source, nodeid, rank) selected explicitly: with iterations <= 0 this
+    // IS the result, and it must match the localized regime's column order
+    var state = verts.crossJoin(srcDf).select(col("source"), col("nodeid"),
+      when(col("nodeid") === col("source"), lit(1.0)).otherwise(lit(0.0)).as("rank"))
     try withIterationAqe(edges, nVerts) { for (_ <- 1 to iterations) {
       val rd = state.as("st").join(maybeBroadcast(deg.as("dg")),
         col("st.nodeid") === col("dg.src"), "left_outer")

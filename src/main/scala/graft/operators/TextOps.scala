@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{TermDictionary, TermIds, Tokens}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-corpus operators: the assignment-2 family of the reference
   * (WordCount, BigramCount, windowed co-occurrence pairs/stripes, PMI).
@@ -30,13 +34,15 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Whitespace tokenization with empty-token removal. */
+  /** Whitespace tokenization with empty-token removal: the maximal runs of
+    * bytes outside java.util.regex's `\s` set (space and 0x09-0x0D; U+00A0
+    * and U+3000 are token characters). A row that is not valid UTF-8 is
+    * first decoded with U+FFFD replacement. One codegen'd `graft_tokens`
+    * byte scan per row (graft.functions.Kernels.tokenize); it enters the
+    * plan through ColumnBridge so that no session registration has to
+    * precede the Column. */
   def tokens(text: Column): Column =
-    // array_remove (not a filter() lambda): higher-order functions are
-    // CodegenFallback, and ONE fallback expression kicks the whole
-    // projection out of whole-stage codegen for every query that
-    // tokenizes. Identical semantics: drop empty-string tokens.
-    array_remove(split(trim(text), "\\s+"), "")
+    ColumnBridge.column(Tokens(ColumnBridge.expression(text)))
 
   private def withToks(docs: DataFrame, textCol: String): DataFrame =
     docs.withColumn("toks", tokens(col(textCol)))
@@ -90,10 +96,13 @@ object TextOps {
       .agg(map_from_entries(
         sort_array(collect_list(struct(col("neighbor"), col("cnt"))))).as("stripe"))
 
-  /** Per-document sorted distinct terms — P4/T5. */
+  /** Per-document sorted distinct terms — P4/T5. sort_array, not
+    * array_sort: array_sort's comparator lambda is CodegenFallback and
+    * keeps the whole projection, tokenizer included, out of whole-stage
+    * codegen. Tokens are never null, so both sort to the same order. */
   def docDistinctTerms(docs: DataFrame, docIdCol: String, textCol: String): DataFrame =
     withToks(docs, textCol)
-      .select(col(docIdCol).as("doc_id"), array_sort(array_distinct(col("toks"))).as("terms"))
+      .select(col(docIdCol).as("doc_id"), sort_array(array_distinct(col("toks"))).as("terms"))
 
   /** (x, y, n_docs) for unordered distinct-term pairs x < y — P5/A3. */
   def pairDocCounts(docs: DataFrame, docIdCol: String, textCol: String): DataFrame = {
@@ -109,7 +118,12 @@ object TextOps {
     *
     * pmi = ln(N * c(x,y) / (c(x) * c(y))), natural log as in the reference
     * (PairsPMI.java:238-240). Marginals c(x) are doc-frequencies of single
-    * terms; joined twice via broadcast (vocab is small relative to pairs).
+    * terms, collected to the driver as the side data every mapper of the
+    * reference loads (the vocabulary is small relative to pairs). Their
+    * sorted vocabulary numbers the terms, and the pairs are counted over
+    * those ids: the pair stage then hashes two ints per pair instead of
+    * copying out two strings, and allocates nothing per pair. Id order is
+    * string order, so x < y is the same filter on either.
     * `minCount` mirrors the reference's >= 10 threshold (PairsPMI.java:126);
     * applying it BEFORE the joins prunes the pair relation early.
     */
@@ -125,15 +139,30 @@ object TextOps {
     val marginals = terms
       .select(explode(col("terms")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("df"))
-    val pairs = terms
-      .select(col("doc_id"), explode(col("terms")).as("x"), col("terms"))
-      .select(col("doc_id"), col("x"), explode(col("terms")).as("y"))
-      .where(col("x") < col("y"))
-      .groupBy("x", "y").agg(count(lit(1)).as("n_docs"))
+      .collect()
+      .map(r => (UTF8String.fromString(r.getString(0)), r.getLong(1)))
+      .sortWith((a, b) => a._1.compareTo(b._1) < 0)
+    val dict = new TermDictionary(marginals.map(_._1))
+    val vocab = docs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(marginals.indices.map { i =>
+        Row(i, marginals(i)._1.toString, marginals(i)._2)
+      }: _*),
+      StructType(Seq(StructField("id", IntegerType, nullable = false),
+        StructField("t", StringType, nullable = false),
+        StructField("df", LongType, nullable = false))))
+    def side(v: String): DataFrame = broadcast(vocab.select(
+      col("id").as(s"${v}_id"), col("t").as(v), col("df").as(s"df_$v")))
+    val ids = terms.select(
+      ColumnBridge.column(TermIds(ColumnBridge.expression(col("terms")), dict)).as("ids"))
+    val pairs = ids
+      .select(explode(col("ids")).as("x_id"), col("ids"))
+      .select(col("x_id"), explode(col("ids")).as("y_id"))
+      .where(col("x_id") < col("y_id"))
+      .groupBy("x_id", "y_id").agg(count(lit(1)).as("n_docs"))
       .where(col("n_docs") >= minCount)
     pairs
-      .join(broadcast(marginals.withColumnRenamed("t", "x").withColumnRenamed("df", "df_x")), "x")
-      .join(broadcast(marginals.withColumnRenamed("t", "y").withColumnRenamed("df", "df_y")), "y")
+      .join(side("x"), "x_id")
+      .join(side("y"), "y_id")
       .select(col("x"), col("y"), col("n_docs"),
         log(col("n_docs") * lit(n.toDouble) / (col("df_x") * col("df_y"))).as("pmi"))
   }

@@ -12,7 +12,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * carry a DRIVER-BUILT object (e.g. the per-iteration rank table of the
   * localized PageRank regime, graft.functions.MapLookup) cannot be spelled
   * as SQL literals; they need direct Expression -> Column construction,
-  * which Spark 4 keeps `private[sql]` (classic.ExpressionUtils). This
+  * which Spark 4 keeps `private[sql]` (classic.ExpressionUtils). The
+  * tokenizer behind every text operator (graft.functions.Tokens) takes the
+  * same door, so it never depends on a registration having run first. This
   * one-file subpackage of org.apache.spark.sql re-exports exactly the two
   * conversions and nothing else.
   */

@@ -153,6 +153,80 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` with the localized-regime vertex cutoff overridden. */
+  private def withCutoff[T](cutoff: Long)(body: => T): T = {
+    sys.props("graft.graph.localizedCutoff") = cutoff.toString
+    try body finally sys.props.remove("graft.graph.localizedCutoff")
+  }
+
+  test("an unparseable spark.sql.shuffle.partitions falls back to " +
+      "defaultParallelism instead of failing the graph op") {
+    assert(GraphOps.partitionCap(4, "auto") === 4L)
+    assert(GraphOps.partitionCap(4, "") === 4L)
+    assert(GraphOps.partitionCap(4, " 16 ") === 16L)
+    assert(GraphOps.partitionCap(4, "2") === 4L)
+    // Spark 4 rejects "auto" at conf.set, but it validates the TRIMMED
+    // value and stores the raw string, which a bare .toInt cannot parse
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, " 8 ")
+    val got = try GraphOps.pageRank(smallEdges, iterations = 10,
+        vertices = Some(smallVerts))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    finally spark.conf.set(key, prev)
+    val exp = seqPageRank(smallAdj, 10)
+    assert(got.keySet === exp.keySet)
+    for ((k, v) <- exp) assert(math.abs(got(k) - v) < 1e-12, s"node $k")
+  }
+
+  test("personalizedPageRank with iterations <= 0 returns (source, nodeid, " +
+      "rank) in both regimes, on both scatter paths") {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    def run(iterations: Int, hub: Long) = {
+      val df = GraphOps.personalizedPageRank(smallEdges, Seq(1L, 4L),
+        iterations = iterations, vertices = Some(smallVerts),
+        numPartitions = 4, hubDegreeThreshold = hub)
+      (df.schema.map(f => f.name -> f.dataType),
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+          .sorted.toSeq)
+    }
+    for (iterations <- Seq(0, -1); hub <- Seq(Long.MaxValue, 1L)) {
+      val localized = run(iterations, hub)
+      val join = withCutoff(0)(run(iterations, hub))
+      assert(localized._1 ===
+        Seq("source" -> LongType, "nodeid" -> LongType, "rank" -> DoubleType),
+        s"localized schema, iterations=$iterations hub=$hub")
+      assert(join._1 === localized._1, s"join schema, iterations=$iterations hub=$hub")
+      assert(join._2 === localized._2, s"rows, iterations=$iterations hub=$hub")
+      assert(localized._2.length === 10 &&
+        localized._2.forall { case (s, n, r) => r == (if (s == n) 1.0 else 0.0) })
+    }
+  }
+
+  test("PPR driver-memory gate counts sources: many sources on a small " +
+      "graph take the join regime and agree rank for rank") {
+    val sources = smallAdj.keys.toSeq.sorted
+    def run(hub: Long) = GraphOps.personalizedPageRank(smallEdges, sources,
+        iterations = 10, vertices = Some(smallVerts), numPartitions = 4,
+        hubDegreeThreshold = hub)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    for (hub <- Seq(Long.MaxValue, 1L)) {
+      // 5 vertices x 1 source fits a cutoff of 10; x 5 sources does not
+      val join = withCutoff(10) {
+        assert(GraphOps.pprFitsDriver(smallAdj.size, 1))
+        assert(!GraphOps.pprFitsDriver(smallAdj.size, sources.length))
+        run(hub)
+      }
+      assert(GraphOps.pprFitsDriver(smallAdj.size, sources.length))
+      val localized = run(hub)
+      assert(join.keySet === localized.keySet, s"hub=$hub")
+      for ((k, v) <- localized)
+        assert(math.abs(join(k) - v) < 1e-12, s"hub=$hub state $k")
+      for (src <- sources; (k, v) <- seqPpr(smallAdj, src, 10))
+        assert(math.abs(localized((src, k)) - v) < 1e-12, s"source $src node $k")
+    }
+  }
+
   test("reliable checkpointing (checkpointDir) yields BIT-IDENTICAL ranks " +
       "across the whole iterative family, on both scatter paths") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString

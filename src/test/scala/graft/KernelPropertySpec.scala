@@ -5,15 +5,16 @@ import java.security.MessageDigest
 import graft.functions.{Kernels, KmvSketch}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalacheck.{Gen, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests (ScalaCheck) for the native kernels against independent
   * scala reference implementations — no Spark round-trip per sample, so
   * hundreds of cases run in milliseconds. These are the §5-style property
   * obligations: hash/permutation correctness, sketch merge laws, metric
-  * bounds.
+  * bounds. The tokenizer's reference is the Spark expression it replaced,
+  * evaluated once per generated batch of strings.
   */
 class KernelPropertySpec extends AnyFunSuite {
 
@@ -30,6 +31,29 @@ class KernelPropertySpec extends AnyFunSuite {
 
   private def arr(toks: Seq[String]): GenericArrayData =
     new GenericArrayData(toks.map(UTF8String.fromString).toArray[Any])
+
+  /** UTF-8 byte strings built from pieces that stress the tokenizer: the
+    * six `\s` bytes, Unicode spaces `\s` does NOT match (U+00A0, U+3000),
+    * multi-byte characters, and malformed sequences (stray continuation,
+    * truncated lead, overlong, encoded surrogate, above U+10FFFF, 0xFF). */
+  private val genTextBytes: Gen[Array[Byte]] = {
+    def utf8(s: String) = s.getBytes("UTF-8").toSeq
+    val spaces = Seq(" ", "\t", "\n", "\u000b", "\f", "\r").map(utf8)
+    val piece = Gen.frequency(
+      4 -> Gen.alphaNumChar.map(c => utf8(c.toString)),
+      3 -> Gen.oneOf(spaces),
+      1 -> Gen.oneOf(Seq("\u00a0", "\u3000", "\u00e9", "\u4e2d", "\ud83d\ude00",
+        "\u0085", "\u2028").map(utf8)),
+      1 -> Gen.oneOf(Seq(Seq(0x80), Seq(0xbf), Seq(0xc3), Seq(0xc0, 0xaf),
+        Seq(0xe0, 0x80, 0xaf), Seq(0xed, 0xa0, 0x80), Seq(0xf4, 0x90, 0x80, 0x80),
+        Seq(0xf0, 0x9f), Seq(0xff), Seq(0xe2, 0x82)).map(_.map(_.toByte))))
+    Gen.frequency(
+      1 -> Gen.const(Array.emptyByteArray),
+      1 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf(spaces)))
+        .map(_.flatten.toArray),
+      8 -> Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, piece))
+        .map(_.flatten.toArray))
+  }
 
   /** Independent md5-prefix reference: first 15 hex chars as a long. */
   private def refHash60(s: String): Long = {
@@ -144,6 +168,36 @@ class KernelPropertySpec extends AnyFunSuite {
       if (distinct < 64) est == distinct.toDouble
       else est > 0 && java.lang.Double.isFinite(est)
     }, "kmv estimate")
+  }
+
+  test("tokenize equals the former split/trim expression evaluated by Spark") {
+    import org.apache.spark.sql.functions._
+    val spark = SparkSpec.session
+    import spark.implicits._
+    val hex = (b: Seq[Byte]) => b.map(x => f"${x & 0xff}%02x").mkString(" ")
+    // one Spark query per generated batch of strings; `raw` proves the
+    // binary -> string cast handed the malformed bytes to split unchanged
+    val prop = forAllNoShrink(Gen.listOfN(200, genTextBytes)) { batch =>
+      val old = batch.zipWithIndex.map { case (b, i) => (i, b) }.toDF("i", "b")
+        .select(col("i"), col("b").cast("string").cast("binary").as("raw"),
+          array_remove(split(trim(col("b").cast("string")), "\\s+"), "").as("toks"))
+        .collect().sortBy(_.getInt(0))
+      val bad = old.find { r =>
+        val in = batch(r.getInt(0))
+        val want = r.getSeq[String](2).map(_.getBytes("UTF-8").toSeq)
+        val got = Kernels.tokenize(UTF8String.fromBytes(in)).toArray[UTF8String](
+          org.apache.spark.sql.types.StringType).map(_.getBytes.toSeq).toSeq
+        !(r.getAs[Array[Byte]](1).sameElements(in)) || got != want
+      }
+      val invalid = batch.count(b => !UTF8String.fromBytes(b).isValid)
+      Prop(bad.isEmpty && invalid > 0) :| bad.fold(s"$invalid invalid rows")(r =>
+        s"input [${hex(batch(r.getInt(0)).toSeq)}]")
+    }
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(r.passed, r.status match {
+      case SCTest.Failed(_, labels) => s"tokenize: ${labels.mkString("; ")}"
+      case other => s"tokenize: $other"
+    })
   }
 
   test("stop hits never exceed the token count and sum profile overlaps correctly") {
